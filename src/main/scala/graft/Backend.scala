@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.spec.{DumpSpec, SpecJson}
 import graft.sources.EntityCorpus
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Multi-spec batch worker — the reference's production path
   * (`Backend.java:100-156`): claim pending specs, run them all over ONE
@@ -58,6 +60,21 @@ object Backend {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
+
+  // `_meta` rows besides StatsRow: dump specs, run record, lineage manifest
+  private case class DumpRow(dumpId: String, specJson: String, createdAt: String)
+  private case class RunRow(runId: String, startedAt: String, finishedAt: String, count: Long,
+                            snapshotVersion: Int)
+  private case class ManifestRow(specId: String, snapshotVersion: Int, path: String, rows: Long,
+                                 min_subj: String, max_subj: String)
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** One JSON object per row, keyed by field name, so
+    * `spark.read.json(target)` reads the rows back as a table. */
+  private def writeJsonLines(target: Path, rows: Seq[Product]): Unit =
+    atomicWrite(target, rows.map { r => json.writeValueAsString(
+      ListMap.from(r.productElementNames.zip(r.productIterator)).asJava) + "\n" }.mkString)
 
   private def atomicWrite(target: Path, content: String): Unit = {
     Files.createDirectories(target.getParent)
@@ -122,8 +139,6 @@ object Backend {
     * specsDir/outDir — each spec is produced exactly once. */
   def run(spark: SparkSession, specsDir: String, corpusArg: String, outDir: String,
           staleClaimMs: Long = 30 * 60 * 1000L): RunReport = {
-    import spark.implicits._
-
     // ---- S7 intake: directory-scan of spec JSONs ----
     val specFiles = new java.io.File(specsDir).listFiles()
       .filter(f => f.getName.endsWith(".json"))
@@ -175,115 +190,103 @@ object Backend {
       println(s"[backend] $n claimed by another worker, skipping")
     }
 
-    // ---- A2: progress reporter (processing-time timer over listener counts)
+    // ---- A2: progress reporter (processing-time timer over listener
+    // counts), torn down however the run ends so runs do not pile up
     val rowsSeen = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    val progress = new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null) rowsSeen.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    })
+    }
+    spark.sparkContext.addSparkListener(progress)
     val timer = new java.util.Timer("graft-progress", true)
     timer.scheduleAtFixedRate(new java.util.TimerTask {
       def run(): Unit = System.err.println(s"[backend] progress: ~${rowsSeen.get} input records read")
     }, 10000, 10000)
+    try {
+      val corpus =
+        if (corpusArg.startsWith("gen:")) EntityCorpus.generate(spark, corpusArg.drop(4).toLong).toDF()
+        else if (corpusArg.endsWith(".gz") || corpusArg.endsWith(".bz2") || corpusArg.endsWith(".zst")
+          || corpusArg.contains("dump")) EntityCorpus.readDump(spark, corpusArg)
+        else spark.read.parquet(corpusArg)
 
-    val corpus =
-      if (corpusArg.startsWith("gen:")) EntityCorpus.generate(spark, corpusArg.drop(4).toLong).toDF()
-      else if (corpusArg.endsWith(".gz") || corpusArg.endsWith(".bz2") || corpusArg.endsWith(".zst")
-        || corpusArg.contains("dump")) EntityCorpus.readDump(spark, corpusArg)
-      else spark.read.parquet(corpusArg)
+      // ---- D3/S3: ONE multiplexed pass serves every claimed spec,
+      // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
+      // claimed specId partitions are swapped; completed ones keep their
+      // files; concurrent workers serialize through the manifest CAS).
+      // The A1 counters ride the same pass as an observation, named per
+      // run because concurrent workers may share one session.
+      val specs = claimed.map { case (name, _, spec) => name -> spec }.toSeq
+      val counters = new Observation(s"graft_counters_$runId")
+      val t0 = System.nanoTime()
+      // Range-partition on (specId, subj) rather than hashing specId
+      // alone: one-partition-per-spec would funnel a whole spec's output
+      // through ONE task (a 100 TB spec = one writer), while ranging over
+      // the subject splits each spec across many tasks AND gives every
+      // output file a tight subject interval — which the manifest records
+      // as per-file min/max stats, so subject-range reads skip files
+      // (Iceberg file-skipping). Sorting within partitions keeps row
+      // groups aligned with the range for parquet-level stats too.
+      val outParts = math.max(specs.size,
+        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      val snapshot =
+        if (specs.isEmpty) None
+        else Some(sources.SnapshotTable.commit(
+          Pipeline.triplesMultiplexed(corpus, specs, observation = Some(counters))
+            .repartitionByRange(outParts, col("specId"), col("subj"))
+            .sortWithinPartitions("specId", "subj"),
+          table, "specId", replace = true, statsCols = Seq("subj"),
+          // claimed specs that emit ZERO triples still swap out their old
+          // partition (a re-opened spec must never keep serving triples
+          // computed from the previous spec/corpus version)
+          clearPartitions = specs.map(_._1)))
 
-    // ---- D3/S3: ONE multiplexed pass serves every claimed spec,
-    // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
-    // claimed specId partitions are swapped; completed ones keep their
-    // files; concurrent workers serialize through the manifest CAS)
-    val specs = claimed.map { case (name, _, spec) => name -> spec }.toSeq
-    val t0 = System.nanoTime()
-    // Range-partition on (specId, subj) rather than hashing specId
-    // alone: one-partition-per-spec would funnel a whole spec's output
-    // through ONE task (a 100 TB spec = one writer), while ranging over
-    // the subject splits each spec across many tasks AND gives every
-    // output file a tight subject interval — which the manifest records
-    // as per-file min/max stats, so subject-range reads skip files
-    // (Iceberg file-skipping). Sorting within partitions keeps row
-    // groups aligned with the range for parquet-level stats too.
-    val outParts = math.max(specs.size,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val snapshot =
-      if (specs.isEmpty) None
-      else Some(sources.SnapshotTable.commit(
-        Pipeline.triplesMultiplexed(corpus, specs)
-          .repartitionByRange(outParts, col("specId"), col("subj"))
-          .sortWithinPartitions("specId", "subj"),
-        table, "specId", replace = true, statsCols = Seq("subj"),
-        // claimed specs that emit ZERO triples still swap out their old
-        // partition (a re-opened spec must never keep serving triples
-        // computed from the previous spec/corpus version)
-        clearPartitions = specs.map(_._1)))
+      // ---- per-spec stats (A1/A5) for the claimed set, then commit the
+      // done markers LAST (data is already durable; crash before a marker
+      // only re-runs that spec, which the partition replace absorbs)
+      val claimedFiles =
+        for (snap <- snapshot.toSeq; (n, _) <- specs; f <- snap.partitions.getOrElse(n, Nil)) yield n -> f
+      val allCounters = if (specs.isEmpty) Map.empty[String, (Long, Long)]
+                        else Pipeline.observedCounters(counters, specs)
+      claimed.foreach { case (name, json, _) =>
+        val (ents, stmts) = allCounters(name)
+        val triples = claimedFiles.collect { case (`name`, f) => f.rows }.sum
+        atomicWrite(doneDir.resolve(s"$name.tsv"),
+          s"${identSha(json)}\t$runId\t$ents\t$stmts\t$triples\n")
+      }
+      val finishedAt = java.time.Instant.now.toString
+      val snapshotVersion = snapshot.fold(0)(_.version)
 
-    // ---- per-spec stats (A1/A5) for the claimed set, then commit the
-    // done markers LAST (data is already durable; crash before a marker
-    // only re-runs that spec, which the partition replace absorbs)
-    val allCounters =
-      if (specs.nonEmpty) Pipeline.countersMultiplexed(corpus, specs)
-      else Map.empty[String, (Long, Long)]
-    // triple counts straight off the committed manifest's footer stats —
-    // no recount job
-    val tripleCounts: Map[String, Long] = snapshot match {
-      case Some(snap) =>
-        specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil).map(_.rows).sum }.toMap
-      case None => Map.empty
+      // per-file lineage manifest of the claimed partitions, off the commit
+      if (specs.nonEmpty)
+        writeJsonLines(Paths.get(s"$outDir/_meta/manifests/$runId.json"), claimedFiles.map { case (n, f) =>
+          val subj = f.stats.get("subj")
+          ManifestRow(n, snapshotVersion, f.path, f.rows, subj.map(_.min).orNull, subj.map(_.max).orNull)
+        })
+
+      // ---- metadata tables (the MariaDB analog), run-scoped so
+      // concurrent workers never overwrite each other's files; the done
+      // markers are the authoritative cross-run state
+      val db = s"$outDir/_meta/db/$runId"
+      writeJsonLines(Paths.get(s"$db/dump.json"), specFiles.map { case (n, j, _) => DumpRow(n, j, startedAt) })
+      writeJsonLines(Paths.get(s"$db/run.json"),
+        Seq(RunRow(runId, startedAt, finishedAt, rowsSeen.get, snapshotVersion)))
+
+      // ---- A5: run-level report over ALL done markers, including other
+      // workers' output
+      val stats = Option(doneDir.toFile.listFiles((_, n) => n.endsWith(".tsv"))).toSeq.flatten
+        .map(f => (f.getName.stripSuffix(".tsv"), Files.readString(f.toPath).trim.split("\t")))
+        .collect { case (n, f) if f.length >= 5 => StatsRow(f(1), n, f(2).toLong, f(3).toLong, f(4).toLong) }
+        .sortBy(_.dumpId)
+      writeJsonLines(Paths.get(s"$db/dump_stats.json"), stats)
+      val secs = (System.nanoTime() - t0) / 1e9
+      stats.foreach(s => println(
+        s"[backend] ${s.dumpId} | ${s.entityCount} | ${s.statementCount} | ${s.tripleCount}"))
+      println(f"[backend] run=$runId specs=${specs.size} wall=$secs%.1fs out=$outDir")
+      RunReport(runId, specs.map(_._1), skipped.map(_._1).toSeq, stats)
+    } finally {
+      timer.cancel()
+      spark.sparkContext.removeSparkListener(progress)
     }
-    claimed.foreach { case (name, json, _) =>
-      val (ents, stmts) = allCounters(name)
-      atomicWrite(doneDir.resolve(s"$name.tsv"),
-        s"${identSha(json)}\t$runId\t$ents\t$stmts\t${tripleCounts.getOrElse(name, 0L)}\n")
-    }
-    val finishedAt = java.time.Instant.now.toString
-
-    // per-partition lineage manifest for this worker's claimed
-    // partitions, read back through the committed snapshot (manifest-
-    // pruned to exactly the claimed specs)
-    if (specs.nonEmpty)
-      sources.SnapshotTable.read(spark, table, version = snapshot.get.version,
-          partitions = Some(specs.map(_._1)))
-        .groupBy(col("specId"), spark_partition_id().as("part"))
-        .agg(count(lit(1)).as("triples"), min("subj").as("min_subj"), max("subj").as("max_subj"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_meta/manifests/$runId")
-
-    // ---- metadata tables (the MariaDB analog), run-scoped so
-    // concurrent workers never overwrite each other's parquet dirs;
-    // the done markers are the authoritative cross-run state
-    specFiles.map { case (n, j, _) => (n, j, startedAt) }.toSeq
-      .toDF("dumpId", "specJson", "createdAt")
-      .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump")
-    Seq((runId, startedAt, finishedAt, rowsSeen.get)).toDF(
-      "runId", "startedAt", "finishedAt", "count")
-      .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/run")
-
-    // ---- A5: run-level report over ALL done markers (dump ⟕ stats
-    // join in Spark — J4/J5 exercise), including other workers' output
-    val stats = {
-      val rows = scala.collection.mutable.ArrayBuffer.empty[StatsRow]
-      if (Files.exists(doneDir))
-        Files.newDirectoryStream(doneDir, "*.tsv").forEach { p =>
-          val f = Files.readString(p).trim.split("\t")
-          if (f.length >= 5)
-            rows += StatsRow(f(1), p.getFileName.toString.stripSuffix(".tsv"),
-              f(2).toLong, f(3).toLong, f(4).toLong)
-        }
-      rows.toSeq.sortBy(_.dumpId)
-    }
-    stats.toDF().write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump_stats")
-    val report = stats.toDF().as("s")
-      .join(specFiles.map(x => (x._1, startedAt)).toSeq.toDF("dumpId", "createdAt").as("d"),
-        $"s.dumpId" === $"d.dumpId", "left_outer")
-      .select($"s.dumpId", $"s.entityCount", $"s.statementCount", $"s.tripleCount")
-      .orderBy($"s.dumpId")
-    timer.cancel()
-    val secs = (System.nanoTime() - t0) / 1e9
-    report.collect().foreach(r => println(s"[backend] ${r.mkString(" | ")}"))
-    println(f"[backend] run=$runId specs=${specs.size} wall=$secs%.1fs out=$outDir")
-    RunReport(runId, specs.map(_._1), skipped.map(_._1).toSeq, stats)
   }
 
   def main(args: Array[String]): Unit = {

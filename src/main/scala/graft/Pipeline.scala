@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Model._
 import graft.spec.{DumpSpec, SpecCompiler}
@@ -172,24 +172,37 @@ object Pipeline {
   /** S3 multiplexed scan: N specs share ONE pass. Per-spec include bits
     * are computed as an array of Column predicates (so the scan filter
     * is still a pushdown-able disjunction), then each included (doc,
-    * spec) pair is emitted. No caching needed — truly one scan. */
+    * spec) pair is emitted. No caching needed — truly one scan. Given an
+    * `observation` (named uniquely among the session's concurrent plans),
+    * the A1 counters ride the same pass: [[observedCounters]] reads them. */
   def triplesMultiplexed(corpus: DataFrame, specs: Seq[(String, DumpSpec)],
                          sites: TripleEmitter.Sites = EntityCorpus.sites,
                          dedup: Boolean = true,
-                         format: DumpFormat = DumpFormat.Fixture): DataFrame = {
+                         format: DumpFormat = DumpFormat.Fixture,
+                         observation: Option[Observation] = None): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // any spec wants it → full-parse + deserialize once; the cheap gate
     // and the per-spec include bits both run over the minimal parse
-    val rows = corpus
+    val gated = corpus
       .filter(prefilterMulti(specs.map(_._2), format) &&
         format.gate(col("content"), d => d("type") =!= "lexeme" &&
           specs.map { case (_, s) => SpecCompiler.includePredicate(s, d) }.reduce(_ || _)))
       .select(format.doc(col("content")).as("doc"),
         format.filterDoc(col("content")).as("fdoc"))
-      .select(struct(docColumns: _*).as("d"),
+      .select(struct(docColumns: _*).as("d"), col("fdoc"),
         array(specs.map { case (_, s) => SpecCompiler.includePredicate(s, col("fdoc")) }: _*).as("inc"))
-      .as[(EntityDoc, Seq[Boolean])]
+    val rows = observation.fold(gated) { obs =>
+      // statements count once per entity, BEFORE the rank gate (reference
+      // `FilteredRdfSerializer.java:328-331`); names are fixed per spec
+      // index because the observed map does not keep aggregate order
+      val aggs = specs.zipWithIndex.flatMap { case ((_, s), k) =>
+        val inc = col("inc")(k)
+        Seq(sum(when(inc, 1L)).as(s"e$k"),
+          sum(when(inc, SpecCompiler.includedStatementsExpr(s, col("fdoc")).cast("long"))).as(s"s$k"))
+      }
+      gated.observe(obs, aggs.head, aggs.tail: _*)
+    }.select(col("d"), col("inc")).as[(EntityDoc, Seq[Boolean])]
     val specArr = specs.toIndexedSeq
     val sitesB = spark.sparkContext.broadcast(sites)
     val emitted = rows.flatMap { case (doc, inc) =>
@@ -324,29 +337,13 @@ object Pipeline {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** A1 counters for N specs in ONE corpus pass: per-spec conditional
-    * aggregates (sum(when(include_k, …))) — at 10^12 rows this replaces
-    * N+1 full scans with one. Returns specId → (entities, statements). */
-  def countersMultiplexed(corpus: DataFrame, specs: Seq[(String, DumpSpec)],
-                          format: DumpFormat = DumpFormat.Fixture): Map[String, (Long, Long)] = {
-    // rows failing every spec's pre-gate contribute zero to every
-    // conditional aggregate — exclude them before any parse
-    val base = corpus
-      .filter(prefilterMulti(specs.map(_._2), format) &&
-        format.gate(col("content"), d => d("type") =!= "lexeme"))
-      .select(format.filterDoc(col("content")).as("doc"))
-    val aggs = specs.flatMap { case (_, spec) =>
-      val inc = SpecCompiler.includePredicate(spec, col("doc"))
-      Seq(
-        sum(when(inc, 1L).otherwise(0L)),
-        sum(when(inc, SpecCompiler.includedStatementsExpr(spec, col("doc")).cast("long"))
-          .otherwise(0L)))
-    }
-    val row = base.agg(aggs.head, aggs.tail: _*).head()
-    specs.zipWithIndex.map { case ((name, _), k) =>
-      name -> (Option(row.get(2 * k)).fold(0L)(_.asInstanceOf[Long]),
-               Option(row.get(2 * k + 1)).fold(0L)(_.asInstanceOf[Long]))
-    }.toMap
+  /** specId → (entities, statements) from an observation that
+    * [[triplesMultiplexed]] filled; blocks until its action has run. */
+  def observedCounters(observation: Observation,
+                       specs: Seq[(String, DumpSpec)]): Map[String, (Long, Long)] = {
+    val m = observation.get
+    def long(key: String): Long = m.get(key).flatMap(Option(_)).fold(0L)(_.asInstanceOf[Long])
+    specs.zipWithIndex.map { case ((name, _), k) => name -> (long(s"e$k"), long(s"s$k")) }.toMap
   }
 
   /** J3: property→datatype side table derived from the corpus itself in

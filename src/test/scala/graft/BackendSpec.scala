@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** S7 claim protocol: concurrent workers over the same specsDir/outDir
   * must produce each spec exactly once (the reference's transactional
@@ -11,6 +12,11 @@ import scala.concurrent.duration._
   * create-if-absent claim files + atomic done markers). */
 class BackendSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Spark jobs one `Backend.run` over gen:800 and the fixture specs may
+    * submit. It measured 4 (dedup shuffle, range sampling, range shuffle,
+    * file write); the margin absorbs a range re-sample. */
+  private val MaxBackendJobs = 6
 
   private val specsDir = "src/test/resources/specs"
   /** parseable specs only — the fixture dir deliberately includes an
@@ -22,6 +28,95 @@ class BackendSpec extends AnyFunSuite {
         Files.readString(f.toPath))).isSuccess)
       .map(_.getName.stripSuffix(".json")).toSet
 
+  private def specNamed(name: String): graft.spec.DumpSpec =
+    graft.spec.SpecJson.parse(Files.readString(Paths.get(s"$specsDir/$name.json")))
+
+  /** The run's done markers, run metadata and lineage manifest agree with
+    * an independent recount: per-spec A1 counters, committed rows. */
+  private def assertRunStats(out: String, corpusArg: String, r: Backend.RunReport): Unit = {
+    val corpus = graft.sources.EntityCorpus.generate(spark, corpusArg.stripPrefix("gen:").toLong).toDF()
+    val table = s"$out/triples"
+    val run = spark.read.json(s"$out/_meta/db/${r.runId}/run.json").head()
+    val version = run.getAs[Long]("snapshotVersion").toInt
+    val manifestPath = Paths.get(s"$out/_meta/manifests/${r.runId}.json")
+    if (r.produced.isEmpty) {
+      assert(version == 0 && !Files.exists(manifestPath))
+      return
+    }
+    val snap = graft.sources.SnapshotTable.snapshotAt(table, version)
+    r.produced.foreach { n =>
+      val f = Files.readString(Paths.get(s"$out/_meta/done/$n.tsv")).trim.split("\t")
+      assert(f(1) == r.runId)
+      assert((f(2).toLong, f(3).toLong) == Pipeline.counters(corpus, specNamed(n)),
+        s"$n: done-marker counters differ from Pipeline.counters")
+      val committed = graft.sources.SnapshotTable.read(spark, table, version = version,
+        partitions = Some(Seq(n))).count()
+      assert(f(4).toLong == committed, s"$n: tripleCount ${f(4)} vs $committed committed rows")
+    }
+    val manifest = spark.read.json(manifestPath.toString).collect()
+    assert(manifest.forall(_.getAs[Long]("snapshotVersion") == version))
+    assert(manifest.map(_.getAs[String]("specId")).toSet.subsetOf(r.produced.toSet))
+    assert(manifest.map(_.getAs[Long]("rows")).sum ==
+      r.produced.flatMap(snap.partitions.getOrElse(_, Nil)).map(_.rows).sum)
+  }
+
+  test("done markers and the run manifest match a recount of the committed snapshot") {
+    val out = Files.createTempDirectory("graft-backend-stats").toString
+    val r = Backend.run(spark, specsDir, "gen:800", out)
+    assert(r.produced.toSet == allSpecNames)
+    assertRunStats(out, "gen:800", r)
+  }
+
+  test("Backend.run is one data pass: a bounded job count and no read-back of its output") {
+    val out = Files.createTempDirectory("graft-backend-jobs").toString
+    val sc = spark.sparkContext
+    val group = "backend-job-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val scans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def scanLocations(p: org.apache.spark.sql.execution.SparkPlanInfo): Seq[String] =
+      p.metadata.get("Location").toSeq ++ p.children.flatMap(scanLocations)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          scanLocations(s.sparkPlanInfo).foreach(scans.add)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      try Backend.run(spark, specsDir, "gen:800", out) finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= MaxBackendJobs, s"${jobs.get} Spark jobs")
+    assert(!scans.asScala.exists(_.contains(s"$out/triples")), s"read-back of the output: $scans")
+  }
+
+  test("every run removes its progress listener and timer, on success and on failure") {
+    val out = Files.createTempDirectory("graft-backend-listener").toString
+    val mydir = Files.createTempDirectory("graft-backend-specs3")
+    Files.copy(Paths.get(s"$specsDir/nothing.json"), mydir.resolve("nothing.json"))
+    val sc = spark.sparkContext
+    def leaked(): Seq[String] = {
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      org.apache.spark.ListenerBusAccess.listeners(sc).map(_.getClass.getName)
+        .filter(_.startsWith("graft.Backend"))
+    }
+    def progressThreads(): Int = {
+      val deadline = System.nanoTime() + 5000000000L
+      def live = Thread.getAllStackTraces.keySet.asScala.count(t => t.getName == "graft-progress" && t.isAlive)
+      while (live > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      live
+    }
+    Backend.run(spark, mydir.toString, "gen:200", out)
+    assert(leaked().isEmpty && progressThreads() == 0, "after a successful run")
+    intercept[Exception](Backend.run(spark, mydir.toString, s"$out/no-such-corpus.parquet", out))
+    assert(leaked().isEmpty && progressThreads() == 0, "after a failed run")
+  }
+
   test("two concurrent workers produce each spec exactly once; third run skips all") {
     val out = Files.createTempDirectory("graft-backend-claims").toString
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -31,6 +126,7 @@ class BackendSpec extends AnyFunSuite {
       val fb = Future(Backend.run(spark, specsDir, "gen:800", out))
       val ra = Await.result(fa, 10.minutes)
       val rb = Await.result(fb, 10.minutes)
+      Seq(ra, rb).foreach(assertRunStats(out, "gen:800", _))
       // exactly-once: the produced sets are disjoint and together cover
       // every spec (each pending spec's claim has exactly one winner)
       assert(ra.produced.toSet.intersect(rb.produced.toSet).isEmpty,

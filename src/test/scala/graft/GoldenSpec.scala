@@ -55,7 +55,10 @@ class GoldenSpec extends AnyFunSuite {
 
   test("one-pass multiplexed counters equal per-spec counters") {
     val specs = specFiles.map(f => f -> specNamed(f))
-    val multi = Pipeline.countersMultiplexed(corpus, specs)
+    val obs = new org.apache.spark.sql.Observation("golden_multiplexed_counters")
+    Pipeline.triplesMultiplexed(corpus, specs, observation = Some(obs))
+      .write.format("noop").mode("overwrite").save()
+    val multi = Pipeline.observedCounters(obs, specs)
     specs.foreach { case (name, spec) =>
       assert(multi(name) == Pipeline.counters(corpus, spec), s"counters diverge for $name")
     }
